@@ -1,60 +1,115 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-round benchmark main (driver contract): runs every declared query on
-  * SPARK_GRAFT_SF_DIR at local[32], forcing full materialization through
-  * the noop sink (count() can short-circuit column reads; noop cannot),
-  * and prints one JSON line with per-query seconds.
+  * SPARK_GRAFT_SF_DIR through [[Graft.session]], forcing full
+  * materialization through the noop sink (count() can short-circuit column
+  * reads; noop cannot), and prints one JSON line with per-query seconds.
   *
   * The parquet footers/fs cache are warmed with a metadata pass first so
-  * query timings measure compute, not first-touch I/O.
+  * query timings measure compute, not first-touch I/O. The staging, canary
+  * and timing helpers below are shared with the scale sweeps.
   */
 object Bench {
+  /** Committed clean-window canary rate at sf0.1 (BENCH_FULL history:
+    * 95-110 k events/s), the reference the window grades read against.
+    */
+  val CanaryBestEventsPerSec = 95000.0
+
+  /** Median of the successful (> 0) measurements, -1 when none succeeded. */
+  def medianOk(xs: Seq[Double]): Double = {
+    val ok = xs.filter(_ > 0).sorted
+    if (ok.isEmpty) -1.0 else ok(ok.size / 2)
+  }
+
+  /** Warm a fixture dir (footer reads + buffer cache + codegen of the scan
+    * paths) without staging anything.
+    */
+  def warm(spark: org.apache.spark.sql.SparkSession, dir: String): Unit = {
+    // events.ts is TIMESTAMP(NANOS) — needs the nanos-as-long legacy conf
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    Tables.all.foreach(t => Tables.load(spark, dir, t).count())
+  }
+
+  /** Pre-stage the streaming fixtures (sentinel files + kinesis shard
+    * logs) and the memoized per-fixture tables (graph edge list, CC dedup
+    * labels, band index, corpus clusters, IVF index, sketch partials).
+    * They model PERSISTED corpus-snapshot tables (built once per corpus,
+    * read by every consumer), so their one-time build is staging, not any
+    * single query's time — otherwise whichever consumer runs first absorbs
+    * the build, and an outlier re-time can record the memo-hit cost for
+    * one run but not another.
+    */
+  def stageFixtures(spark: org.apache.spark.sql.SparkSession, dir: String): Unit = {
+    streaming.RecordStream.eventsStreamWithSentinels(spark, dir)
+    streaming.RecordStream.kinesisFixture(spark, dir)
+    operators.GraphQueries.edges(spark, dir).count()
+    operators.DedupQueries.clusterLabels(spark, dir).count()
+    operators.DedupQueries.bandIndex(spark, dir)._1.count()
+    operators.DedupQueries.corpusClusterLabels(spark, dir).count()
+    operators.SimilarityQueries.ivfIndex(spark, dir)._1.count()
+    operators.AggQueries.hllPartials(spark, dir).count()
+    operators.AggQueries.tdPartials(spark, dir).count()
+  }
+
+  /** Host-noise canary: events/s through the full [REF] decode pipeline
+    * (`stream_payload_pipeline`) over `dir`, median of three runs — one
+    * throttle burst landing on a single run cannot misgrade the window
+    * (max-of-2 graded it by its LUCKIEST instant; the r8 window measured
+    * 0.74× on best-of-2 yet fired 24 sweep flags). Returns the median and
+    * the raw runs; -1 marks a failed run (a 0 would read as a plausible
+    * "measured zero" rate).
+    */
+  def canary(spark: org.apache.spark.sql.SparkSession, dir: String): (Double, Seq[Double]) = {
+    val nEvents = try Tables.events(spark, dir).count() catch { case _: Throwable => -1L }
+    def once(): Double =
+      if (nEvents < 0) -1.0
+      else try {
+        val t0 = System.nanoTime()
+        SparkEntry.queries("stream_payload_pipeline")(spark, dir)
+          .write.mode("overwrite").format("noop").save()
+        nEvents / ((System.nanoTime() - t0) / 1e9)
+      } catch { case _: Throwable => -1.0 }
+    val runs = Seq(once(), once(), once())
+    (medianOk(runs), runs)
+  }
+
+  /** Wall seconds of one query through the noop sink, -1 on failure. */
+  def timeOne(spark: org.apache.spark.sql.SparkSession, d: QueryDef, dir: String,
+      label: String): Double = {
+    val t0 = System.nanoTime()
+    try {
+      d.run(spark, dir).write.mode("overwrite").format("noop").save()
+      (System.nanoTime() - t0) / 1e9
+    } catch {
+      case e: Throwable =>
+        System.err.println(s"[$label] ${d.name} @ $dir failed: ${e.getMessage}")
+        -1.0
+    } finally {
+      // Post-timing sweep hygiene: memory-sink tables (one per streaming
+      // query, up to fixture-sized) and intra-query .cache()s otherwise
+      // accumulate on the driver heap across the 120+ query sweep and
+      // tax late queries with GC — measured as a 1.5-2.5x in-sweep vs
+      // solo gap on the last streaming queries. Each query (re)creates
+      // its own views, so dropping temp views between queries is safe.
+      try {
+        spark.catalog.clearCache()
+        spark.catalog.listTables().collect()
+          .filter(_.isTemporary)
+          .foreach(t => spark.catalog.dropTempView(t.name))
+      } catch { case _: Throwable => () }
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    Graft.redirectTmpDir()
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    Graft.fastLocalDir().foreach(d => builder.config("spark.local.dir", d))
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    // warm: footer reads + buffer cache + codegen of the scan paths
-    // (events.ts is TIMESTAMP(NANOS) — needs the nanos-as-long legacy conf)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    Tables.all.foreach(t => Tables.load(spark, sfDir, t).count())
-    // pre-stage the streaming fixtures (sentinel files + kinesis shard
-    // logs) — one-time JVM-wide staging, not part of any query's timing
-    // — and the two memoized per-fixture tables (graph edge list, CC
-    // dedup labels) for the same reason: they model PERSISTED
-    // corpus-snapshot tables (built once per corpus, read by every
-    // consumer), so their one-time build is staging, not any single
-    // query's time — previously whichever consumer ran first in the
-    // sweep absorbed the build, and the >5 s outlier re-time could then
-    // record the memo-hit cost for one run but not another (the
-    // dedup_clusters 0.32 vs 4.8 s artifact noise this removes). The
-    // staging cost is NOT silently absorbed: it is timed here and
-    // reported as `staging_sec` in the artifact, so cross-round
-    // comparisons of the consumer queries see where the build went.
+    val spark = Graft.session(appName = "graft-bench")
+    warm(spark, sfDir)
+    // staging is one-time JVM-wide work, not part of any query's timing —
+    // but it is NOT silently absorbed: it is timed here and reported as
+    // `staging_sec` in the artifact, so cross-round comparisons of the
+    // consumer queries see where the build went.
     val stagingT0 = System.nanoTime()
-    streaming.RecordStream.eventsStreamWithSentinels(spark, sfDir)
-    streaming.RecordStream.kinesisFixture(spark, sfDir)
-    operators.GraphQueries.edges(spark, sfDir).count()
-    operators.DedupQueries.clusterLabels(spark, sfDir).count()
-    operators.DedupQueries.bandIndex(spark, sfDir)._1.count()
-    operators.DedupQueries.corpusClusterLabels(spark, sfDir).count()
-    // the persisted IVF index pair (r17): same maintained-table policy
-    operators.SimilarityQueries.ivfIndex(spark, sfDir)._1.count()
-    // the persisted sketch-partial tables: same maintained-pre-agg policy
-    operators.AggQueries.hllPartials(spark, sfDir).count()
-    operators.AggQueries.tdPartials(spark, sfDir).count()
+    stageFixtures(spark, sfDir)
     val stagingSec = (System.nanoTime() - stagingT0) / 1e9
 
     // Streaming throughput vs the reference's 2 rec/s producer ceiling
@@ -65,38 +120,16 @@ object Bench {
     // recorded inside one looks like a broad regression. The artifact is
     // self-describing about it — `throttled` below — so nobody has to
     // re-litigate VM noise from per-query deltas.
-    // -1 on failure, like every other errored measurement in this artifact:
-    // a 0 here would make the canary read as a plausible "measured zero"
-    // rate with throttled=false instead of an error
-    val nEvents = try Tables.events(spark, sfDir).count() catch { case _: Throwable => -1L }
-    def canaryOnce(): Double =
-      if (nEvents < 0) -1.0
-      else try {
-        val t0 = System.nanoTime()
-        SparkEntry.queries("stream_payload_pipeline")(spark, sfDir)
-          .write.mode("overwrite").format("noop").save()
-        nEvents / ((System.nanoTime() - t0) / 1e9)
-      } catch { case _: Throwable => -1.0 }
-    // median of three: one throttle burst landing on a single canary run
-    // can no longer misgrade the whole window (max-of-2 graded the window
-    // by its LUCKIEST instant; the r8 window measured 0.74× on best-of-2
-    // yet fired 24 sweep flags — the typical rate, not the peak, is what
-    // the sweep actually experienced). All raw runs stay in the artifact.
-    val canaryRuns = Seq(canaryOnce(), canaryOnce(), canaryOnce())
-    val streamRate = {
-      val ok = canaryRuns.filter(_ > 0).sorted
-      if (ok.isEmpty) -1.0 else ok(ok.size / 2)
-    }
-    // committed clean-window canary rate at sf0.1 (BENCH_FULL history:
-    // 95-110 k events/s). Two window-quality grades, both self-described
-    // in the artifact: `throttled` (< 0.5×) triggers the full-sweep re-run
-    // policy; `degraded` (< 0.85×) marks a window whose per-query figures
+    val (streamRate, canaryRuns) = canary(spark, sfDir)
+    // Two window-quality grades against CanaryBestEventsPerSec, both
+    // self-described in the artifact: `throttled` (< 0.5×) triggers the
+    // full-sweep re-run policy; `degraded` (< 0.85×) marks a window whose per-query figures
     // should be read against `regressions_rechecked`, not at face value —
     // r8's 0.74× window fired 24 noise flags while throttled stayed false,
     // so the artifact needs the finer grade even when the coarse one
     // doesn't trip.
     // Latency-floor canary (r13, STREAM_PROFILE.json attribution): the
-    // throughput canary above is 32-way parallel CPU work, but streaming
+    // throughput canary above is all-core parallel CPU work, but streaming
     // queries also pay a single-threaded, fsync/metadata-latency-bound
     // ceremony floor (~0.32 s/query in a clean window: WAL + offset log +
     // planning + memory-sink drain) that a host can degrade INDEPENDENTLY
@@ -121,12 +154,8 @@ object Bench {
       sec
     } catch { case _: Throwable => -1.0 }
     val floorRuns = Seq(floorOnce(1), floorOnce(2), floorOnce(3))
-    val ceremonyFloor = {
-      val ok = floorRuns.filter(_ > 0).sorted
-      if (ok.isEmpty) -1.0 else ok(ok.size / 2)
-    }
+    val ceremonyFloor = medianOk(floorRuns)
 
-    val CanaryBestEventsPerSec = 95000.0
     val canaryRatio =
       if (streamRate > 0 && sfDir.endsWith("sf0.1"))
         streamRate / CanaryBestEventsPerSec
@@ -138,30 +167,7 @@ object Bench {
     // driver invokes with no args and benches everything).
     val only = args.toSet
     val benched = SparkEntry.allDefs.filter(d => only.isEmpty || only(d.name))
-    def timeOne(d: QueryDef): Double = {
-      val t0 = System.nanoTime()
-      try {
-        d.run(spark, sfDir).write.mode("overwrite").format("noop").save()
-        (System.nanoTime() - t0) / 1e9
-      } catch {
-        case e: Throwable =>
-          System.err.println(s"[bench] ${d.name} failed: ${e.getMessage}")
-          -1.0
-      } finally {
-        // Post-timing sweep hygiene: memory-sink tables (one per streaming
-        // query, up to fixture-sized) and intra-query .cache()s otherwise
-        // accumulate on the driver heap across the 120+ query sweep and
-        // tax late queries with GC — measured as a 1.5-2.5x in-sweep vs
-        // solo gap on the last streaming queries. Each query (re)creates
-        // its own views, so dropping temp views between queries is safe.
-        try {
-          spark.catalog.clearCache()
-          spark.catalog.listTables().collect()
-            .filter(_.isTemporary)
-            .foreach(t => spark.catalog.dropTempView(t.name))
-        } catch { case _: Throwable => () }
-      }
-    }
+    def timeOne(d: QueryDef): Double = Bench.timeOne(spark, d, sfDir, "bench")
     // Degraded/throttled-window policy (VERDICT r11 #4): run the sweep,
     // then ONE full re-run, and report the per-query min. Originally only
     // `throttled` (< 0.5×) windows re-ran, but two of the last three
@@ -335,21 +341,10 @@ object Bench {
         f"""{"query":"$n","prev":$prev%.3f,"best_sec":$now%.3f,"ratio":$r%.2f}"""
       }.mkString("[", ",", "]")
     val regressionsJson = regJson(regressions)
-    // JSON-string escape for free-text fields (ADVICE r13 #4): a reason
-    // containing a backslash or control character previously emitted
-    // invalid JSON into BENCH_FULL.json, which the Jackson-based
-    // DocsClaimSpec/refresh tooling would then fail to parse. One shared
-    // helper covers both free-text channels (reasons AND names).
-    def jsonStr(s: String): String = s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
     val regressionsExpectedJson = regressionsExpected.map {
       case (n, prev, now, r) =>
-        val reason = jsonStr(expectedReasons.getOrElse(n, ""))
-        f"""{"query":"${jsonStr(n)}","reason":"$reason","prev":$prev%.3f,"best_sec":$now%.3f,"ratio":$r%.2f}"""
+        val reason = Graft.jsonEscape(expectedReasons.getOrElse(n, ""))
+        f"""{"query":"${Graft.jsonEscape(n)}","reason":"$reason","prev":$prev%.3f,"best_sec":$now%.3f,"ratio":$r%.2f}"""
     }.mkString("[", ",", "]")
 
     // bench_ref refresh policy, codified (VERDICT r9 #3): the reference is
@@ -432,7 +427,7 @@ object Bench {
       if (!refreshed) Seq.empty
       else expectedEntries.collect { case (n, reason, true) => (n, reason) }
     val bakedJson = bakedExpired.map { case (n, r) =>
-      s"""{"query":"${jsonStr(n)}","reason":"${jsonStr(r)}"}"""
+      s"""{"query":"${Graft.jsonEscape(n)}","reason":"${Graft.jsonEscape(r)}"}"""
     }.mkString("[", ",", "]")
     // Cumulative-drift channel (VERDICT r13 "what's wrong" #1): the flat
     // 0.3 s absolute-growth carve-out in the per-round gate is ratchet-
@@ -501,7 +496,7 @@ object Bench {
         else None
       }.sortBy(-_._4)
     val driftRecheckedJson = driftRechecked.map { case (n, orig, sweep, solo) =>
-      f"""{"query":"${jsonStr(n)}","origin":$orig%.3f,"sweep_sec":$sweep%.3f,"solo_sec":$solo%.3f}"""
+      f"""{"query":"${Graft.jsonEscape(n)}","origin":$orig%.3f,"sweep_sec":$sweep%.3f,"solo_sec":$solo%.3f}"""
     }.mkString("[", ",", "]")
     // Origin coverage append (VERDICT r14 "what's missing" #3): queries
     // added after the origin snapshot have no origin entry, so the
@@ -523,7 +518,7 @@ object Bench {
         try {
           val seed = results.collect { case (n, v) if v > 0 => n -> v }
           val qs = seed.sortBy(_._1)
-            .map { case (n, v) => f""""${jsonStr(n)}":$v%.3f""" }.mkString(",")
+            .map { case (n, v) => f""""${Graft.jsonEscape(n)}":$v%.3f""" }.mkString(",")
           java.nio.file.Files.write(Graft.repoFile(originPath),
             (s"""{"bootstrapped_from":"this sweep (origin file was absent/unparseable)",""" +
               f""""stream_events_per_sec":$streamRate%.0f,"queries":{$qs}}""").getBytes("UTF-8"))
@@ -542,7 +537,7 @@ object Bench {
         if (missing.nonEmpty) try {
           val m = """"queries":\{([^}]*)\}""".r.findFirstMatchIn(originTxt).get
           val add = missing.sortBy(_._1)
-            .map { case (n, v) => f""""${jsonStr(n)}":$v%.3f""" }.mkString(",")
+            .map { case (n, v) => f""""${Graft.jsonEscape(n)}":$v%.3f""" }.mkString(",")
           val spliced = originTxt.substring(0, m.end(1)) +
             (if (m.group(1).trim.isEmpty) add else "," + add) +
             originTxt.substring(m.end(1))
@@ -553,7 +548,7 @@ object Bench {
         else Seq.empty
       }
     val driftCumulativeJson = driftCumulative.map { case (n, orig, now, r) =>
-      f"""{"query":"${jsonStr(n)}","origin":$orig%.3f,"now_sec":$now%.3f,"cum_ratio":$r%.2f}"""
+      f"""{"query":"${Graft.jsonEscape(n)}","origin":$orig%.3f,"now_sec":$now%.3f,"cum_ratio":$r%.2f}"""
     }.mkString("[", ",", "]")
     if (refreshRequested && !refreshEligible)
       System.err.println(
@@ -575,7 +570,7 @@ object Bench {
       else if (frozenArtifact) "BENCH_POSTFREEZE.json"
       else "BENCH_FULL.json"
     val detail =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","artifact_file":"$fullArtifact","frozen_artifact_flow":$frozenArtifact,"queries":${jsonMap(results, 3)},"queries_raw":${jsonMap(raw, 3)},"sf":"$sfDir","staging_sec":$stagingSec%.3f,"stream_events_per_sec":$streamRate%.0f,"canary_runs":${canaryRuns.map(r => f"$r%.0f").mkString("[", ",", "]")},"canary_best_ref":$CanaryBestEventsPerSec%.0f,"canary_ratio":$canaryRatio%.3f,"ceremony_floor_sec":$ceremonyFloor%.3f,"floor_runs":${floorRuns.map(r => f"$r%.3f").mkString("[", ",", "]")},"throttled":$throttled,"degraded":$degraded,"full_rerun":$rerunFullSweep,"bench_ref":"$refPath","ref_refresh_policy":"$refreshPolicy","ref_refresh_requested":$refreshRequested,"ref_refreshed":$refreshed,"refresh_baked_expired":$bakedJson,"bench_ref_origin":"$originPath","origin_parse_ok":$originParseOk,"origin_appended":${originAppended.map(n => "\"" + jsonStr(n) + "\"").mkString("[", ",", "]")},"drift_cumulative":$driftCumulativeJson,"drift_rechecked":$driftRecheckedJson,"regressions":$regressionsJson,"regressions_expected":$regressionsExpectedJson,"expected_file":"$expectedPath","expected_active":${activeExpected.map("\"" + _ + "\"").mkString("[", ",", "]")},"regressions_rechecked":$recheckedJson}"""
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","artifact_file":"$fullArtifact","frozen_artifact_flow":$frozenArtifact,"queries":${jsonMap(results, 3)},"queries_raw":${jsonMap(raw, 3)},"sf":"$sfDir","staging_sec":$stagingSec%.3f,"stream_events_per_sec":$streamRate%.0f,"canary_runs":${canaryRuns.map(r => f"$r%.0f").mkString("[", ",", "]")},"canary_best_ref":$CanaryBestEventsPerSec%.0f,"canary_ratio":$canaryRatio%.3f,"ceremony_floor_sec":$ceremonyFloor%.3f,"floor_runs":${floorRuns.map(r => f"$r%.3f").mkString("[", ",", "]")},"throttled":$throttled,"degraded":$degraded,"full_rerun":$rerunFullSweep,"bench_ref":"$refPath","ref_refresh_policy":"$refreshPolicy","ref_refresh_requested":$refreshRequested,"ref_refreshed":$refreshed,"refresh_baked_expired":$bakedJson,"bench_ref_origin":"$originPath","origin_parse_ok":$originParseOk,"origin_appended":${originAppended.map(n => "\"" + Graft.jsonEscape(n) + "\"").mkString("[", ",", "]")},"drift_cumulative":$driftCumulativeJson,"drift_rechecked":$driftRecheckedJson,"regressions":$regressionsJson,"regressions_expected":$regressionsExpectedJson,"expected_file":"$expectedPath","expected_active":${activeExpected.map("\"" + _ + "\"").mkString("[", ",", "]")},"regressions_rechecked":$recheckedJson}"""
     val outFiles = Seq("target/bench.json", fullArtifact) ++
       (if (refreshed) Seq(refPath) else Seq.empty)
     for (p <- outFiles) {

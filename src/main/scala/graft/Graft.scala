@@ -4,12 +4,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr}
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
-/** Session factory for the engine.
+/** Session factory for the engine: the one place that builds a session.
   *
   * Settings are chosen for correctness parity with the DuckDB oracle (UTC
-  * session time zone) and for local[32] bench runs (32 shuffle partitions —
-  * matching core count, not the 200 default that over-schedules tiny
-  * shuffles). On a real cluster the same builder is used with
+  * session time zone) and for local runs sized to the host: shuffle
+  * partitions follow the session's default parallelism (N for `local[N]`,
+  * one per core) instead of the 200 default that over-schedules tiny
+  * shuffles. On a real cluster the same builder is used with
   * `spark.sql.shuffle.partitions` sized to ~2-3× total cores and AQE left on
   * to coalesce / skew-split at runtime.
   */
@@ -26,7 +27,7 @@ object Graft {
     * (fall back to java.io.tmpdir). NOT result caching: only transient
     * run state moves; every query still computes from the parquet inputs.
     */
-  def fastLocalDir(): Option[String] = {
+  private def fastLocalDir(): Option[String] = {
     val env = sys.env.get("SPARK_GRAFT_LOCAL_DIR")
     val root = env match {
       case Some("0") | Some("false") | Some("off") | Some("no") => return None
@@ -45,9 +46,9 @@ object Graft {
   /** Point the JVM temp dir at the fast local root too, so streaming temp
     * checkpoints and [[Scratch]] directories follow. Must run before the
     * first temp-file creation (the JDK caches the property on first use);
-    * both mains call [[session]]/this before touching Spark.
+    * [[session]] calls it before building.
     */
-  def redirectTmpDir(): Unit =
+  private def redirectTmpDir(): Unit =
     fastLocalDir().foreach { d =>
       try {
         val t = java.nio.file.Paths.get(d, "tmp")
@@ -56,22 +57,47 @@ object Graft {
       } catch { case _: Throwable => () }
     }
 
-  def session(master: String = "local[*]", appName: String = "graft"): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+  /** Build (or join) the JVM's session with the engine's extensions and
+    * settings. The master defaults to `local[$SPARK_GRAFT_CPUS]`, or every
+    * core when the variable is unset. On a running session, `getOrCreate`
+    * keeps its master and extensions; the modifiable settings and the
+    * shuffle-partition count are re-applied, so every caller sees the same
+    * session state.
+    */
+  def session(
+      master: String =
+        sys.env.get("SPARK_GRAFT_CPUS").map(n => s"local[$n]").getOrElse("local[*]"),
+      appName: String = "graft"): SparkSession = {
     redirectTmpDir()
     val builder = SparkSession
       .builder()
       .master(master)
       .appName(appName)
       .withExtensions(new plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
     fastLocalDir().foreach(d => builder.config("spark.local.dir", d))
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    spark.conf.set("spark.sql.shuffle.partitions",
+      spark.sparkContext.defaultParallelism.toLong)
     spark
+  }
+
+  /** JSON string escape (contents only, no surrounding quotes): backslash,
+    * quote, and ALL control chars (<0x20) — a tab or CR in a query's SQL
+    * or a free-text reason would otherwise make a json.load of the
+    * artifact fail.
+    */
+  def jsonEscape(s: String): String = s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
   }
 
   /** Resolve a committed-artifact path against the git toplevel (ADVICE

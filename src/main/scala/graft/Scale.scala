@@ -103,8 +103,7 @@ object ScaleGen {
     val src = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val out = if (args.length > 1) args(1) else "target/scale10"
     val reps = if (args.length > 2) args(2).toInt else 10
-    val spark = Graft.session(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]",
-      "graft-scalegen")
+    val spark = Graft.session(appName = "graft-scalegen")
     generate(spark, src, out, reps)
     Tables.all.foreach { t =>
       println(s"[scalegen] $t: ${spark.read.parquet(s"$out/$t.parquet").count()} rows")
@@ -153,66 +152,40 @@ object BenchScale {
     */
   val RequeryMargin = 0.9
 
+  /** The gated factor: scaled time over the floored base time. */
+  def floored(b: Double, sc: Double): Double = sc / math.max(b, BaseTimeFloor)
+
+  private[graft] def jsonNames(ns: Seq[String]): String =
+    ns.map("\"" + _ + "\"").mkString("[", ",", "]")
+
+  /** `requeried_raw`: per query, the three base and three scaled runs of a
+    * median-of-3 adjudication, recorded as (b1, sc1, b2, sc2, b3, sc3).
+    */
+  private[graft] def requeriedJson(requeried: Iterable[(String, Seq[Double])]): String =
+    requeried.map { case (n, ms) =>
+      val Seq(b1, sc1, b2, sc2, b3, sc3) = ms
+      f""""$n":{"base_runs":[$b1%.3f,$b2%.3f,$b3%.3f],"scaled_runs":[$sc1%.3f,$sc2%.3f,$sc3%.3f]}"""
+    }.mkString("{", ",", "}")
+
   def main(args: Array[String]): Unit = {
     val base = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val scaled = if (args.length > 0) args(0) else "target/scale10"
     val reps = if (args.length > 1) args(1).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Graft.session(s"local[$cpus]", "graft-benchscale")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val spark = Graft.session(appName = "graft-benchscale")
     if (!java.nio.file.Files.exists(java.nio.file.Paths.get(scaled, "lineitem.parquet")))
       ScaleGen.generate(spark, base, scaled, reps)
 
-    // warm both corpora + pre-stage streaming fixtures outside any timing
+    // warm both corpora + pre-stage their fixtures outside any timing
     for (dir <- Seq(base, scaled)) {
-      Tables.all.foreach(t => Tables.load(spark, dir, t).count())
-      streaming.RecordStream.eventsStreamWithSentinels(spark, dir)
-      streaming.RecordStream.kinesisFixture(spark, dir)
-      // pre-stage the memoized per-fixture tables (see Bench warmup)
-      operators.GraphQueries.edges(spark, dir).count()
-      operators.DedupQueries.clusterLabels(spark, dir).count()
-      operators.DedupQueries.bandIndex(spark, dir)._1.count()
-      operators.DedupQueries.corpusClusterLabels(spark, dir).count()
-      operators.SimilarityQueries.ivfIndex(spark, dir)._1.count()
-      operators.AggQueries.hllPartials(spark, dir).count()
-      operators.AggQueries.tdPartials(spark, dir).count()
+      Bench.warm(spark, dir)
+      Bench.stageFixtures(spark, dir)
     }
     // host-noise canary (same contract as Bench)
-    val nEvents = Tables.events(spark, base).count()
-    def canaryOnce(): Double =
-      try {
-        val t0 = System.nanoTime()
-        SparkEntry.queries("stream_payload_pipeline")(spark, base)
-          .write.mode("overwrite").format("noop").save()
-        nEvents / ((System.nanoTime() - t0) / 1e9)
-      } catch { case _: Throwable => -1.0 }
-    // median of three, matching Bench: grade the window by its typical
-    // rate, not its luckiest instant
-    val streamRate = {
-      val ok = Seq(canaryOnce(), canaryOnce(), canaryOnce()).filter(_ > 0).sorted
-      if (ok.isEmpty) -1.0 else ok(ok.size / 2)
-    }
-    val throttled = streamRate > 0 && streamRate < 0.5 * 95000.0
+    val (streamRate, _) = Bench.canary(spark, base)
+    val throttled = streamRate > 0 && streamRate < 0.5 * Bench.CanaryBestEventsPerSec
 
     val defs = SparkEntry.allDefs
-    def timeOne(d: QueryDef, dir: String): Double = {
-      val t0 = System.nanoTime()
-      try {
-        d.run(spark, dir).write.mode("overwrite").format("noop").save()
-        (System.nanoTime() - t0) / 1e9
-      } catch {
-        case e: Throwable =>
-          System.err.println(s"[benchscale] ${d.name} @ $dir failed: ${e.getMessage}")
-          -1.0
-      } finally {
-        try {
-          spark.catalog.clearCache()
-          spark.catalog.listTables().collect()
-            .filter(_.isTemporary)
-            .foreach(t => spark.catalog.dropTempView(t.name))
-        } catch { case _: Throwable => () }
-      }
-    }
+    def timeOne(d: QueryDef, dir: String): Double = Bench.timeOne(spark, d, dir, "benchscale")
     // base first (its cold-codegen cost mirrors the per-round sweep), then
     // scaled — the second run reuses the compiled plans, so the factor
     // isolates DATA growth, not compilation
@@ -232,22 +205,15 @@ object BenchScale {
     // the violation — min-of-two would mask it. All raw measurements stay
     // in the artifact (`requeried_raw`) so adjudicated and as-measured
     // are both visible.
-    def floored(b: Double, sc: Double): Double = sc / math.max(b, BaseTimeFloor)
     val requeried = scala.collection.mutable.LinkedHashMap[String, Seq[Double]]()
-    def med3(first: Double, x: Double, y: Double): Double = {
-      val v = Seq(first, x, y).filter(_ > 0).sorted
-      if (v.isEmpty) -1.0 else v(v.size / 2)
-    }
     def requeryOne(r: (String, Double, Double, Double)): (String, Double, Double, Double) = {
       val (n, b, sc, _) = r
       val d = defs.find(_.name == n).get
-      val b2 = timeOne(d, base)
-      val sc2 = timeOne(d, scaled)
-      val b3 = timeOne(d, base)
-      val sc3 = timeOne(d, scaled)
+      val (b2, sc2) = (timeOne(d, base), timeOne(d, scaled))
+      val (b3, sc3) = (timeOne(d, base), timeOne(d, scaled))
       requeried(n) = Seq(b, sc, b2, sc2, b3, sc3)
-      val bMed = med3(b, b2, b3)
-      val scMed = med3(sc, sc2, sc3)
+      val bMed = Bench.medianOk(Seq(b, b2, b3))
+      val scMed = Bench.medianOk(Seq(sc, sc2, sc3))
       println(f"[benchscale] ${d.name}%-28s REQUERY(med3) base ${bMed}%6.2f s   x$reps ${scMed}%6.2f s   factor ${scMed / bMed}%5.2f")
       (n, bMed, scMed, scMed / bMed)
     }
@@ -331,7 +297,7 @@ object BenchScale {
           // same median-of-3 adjudication as the main sweep
           val sk2 = timeOne(d, skewDir)
           val sk3 = timeOne(d, skewDir)
-          val skMed = med3(sk1, sk2, sk3)
+          val skMed = Bench.medianOk(Seq(sk1, sk2, sk3))
           (n, b, skMed, if (b > 0 && skMed > 0) skMed / b else -1.0)
         } else (n, b, sk1, if (b > 0 && sk1 > 0) sk1 / b else -1.0)
       }
@@ -405,21 +371,18 @@ object BenchScale {
       val qs = rows.map { case (n, b, sc, f) =>
         f""""$n":{"base_sec":$b%.3f,"scaled_sec":$sc%.3f,"factor":$f%.2f}"""
       }.mkString("{", ",", "}")
-      val viol = violations.map("\"" + _ + "\"").mkString("[", ",", "]")
-      val fails = failures.map("\"" + _ + "\"").mkString("[", ",", "]")
-      val exempt = BoundExempt.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
-      val req = requeried.map { case (n, ms) =>
-        val Seq(b1, sc1, b2, sc2, b3, sc3) = ms
-        f""""$n":{"base_runs":[$b1%.3f,$b2%.3f,$b3%.3f],"scaled_runs":[$sc1%.3f,$sc2%.3f,$sc3%.3f]}"""
-      }.mkString("{", ",", "}")
+      val viol = jsonNames(violations)
+      val fails = jsonNames(failures)
+      val exempt = jsonNames(BoundExempt.toSeq.sorted)
+      val req = requeriedJson(requeried)
       val skew = skewRows.map { case (n, b, sk, f) =>
         f""""$n":{"base_sec":$b%.3f,"skew_sec":$sk%.3f,"factor":$f%.2f}"""
       }.mkString("{", ",", "}")
-      val skewViol = skewViolations.map("\"" + _ + "\"").mkString("[", ",", "]")
+      val skewViol = jsonNames(skewViolations)
       val rocks = rocksRows.map { case (n, b, sec, f, rws, bytes, ok) =>
         f""""$n":{"base_sec":$b%.3f,"rocksdb_scaled_sec":$sec%.3f,"factor":$f%.2f,"state_rows":$rws,"state_bytes":$bytes,"provider_confirmed":$ok}"""
       }.mkString("{", ",", "}")
-      val rocksViol = rocksViolations.map("\"" + _ + "\"").mkString("[", ",", "]")
+      val rocksViol = jsonNames(rocksViolations)
       // adjudicated near-bound survivors: entries whose MEDIAN factor
       // still sits within the requery margin of the bound after the
       // med3 pass — the watch list for the next round, named in the
@@ -474,67 +437,29 @@ object BenchScale100 {
     val scaled = if (args.length > 0) args(0) else "target/scale100"
     val reps = if (args.length > 1) args(1).toInt else 100
     val factorBound = 1.2 * reps
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Graft.session(s"local[$cpus]", "graft-benchscale100")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val spark = Graft.session(appName = "graft-benchscale100")
     if (!java.nio.file.Files.exists(java.nio.file.Paths.get(scaled, "lineitem.parquet")))
       ScaleGen.generate(spark, base, scaled, reps)
 
     // warm both corpora and pre-stage the memoized per-fixture tables the
-    // spot families consume (the band index and corpus cluster labels are
-    // maintained-by-ingest tables in the production story — built outside
-    // query timing, exactly like the 10× sweep stages them)
+    // spot families consume (maintained-by-ingest tables in the production
+    // story — built outside query timing, exactly like the 10× sweep)
     for (dir <- Seq(base, scaled)) {
-      Tables.all.foreach(t => Tables.load(spark, dir, t).count())
-      operators.DedupQueries.bandIndex(spark, dir)._1.count()
-      operators.DedupQueries.corpusClusterLabels(spark, dir).count()
-      operators.SimilarityQueries.ivfIndex(spark, dir)._1.count()
+      Bench.warm(spark, dir)
+      Bench.stageFixtures(spark, dir)
     }
-    val nEvents = Tables.events(spark, base).count()
-    def canaryOnce(): Double =
-      try {
-        val t0 = System.nanoTime()
-        SparkEntry.queries("stream_payload_pipeline")(spark, base)
-          .write.mode("overwrite").format("noop").save()
-        nEvents / ((System.nanoTime() - t0) / 1e9)
-      } catch { case _: Throwable => -1.0 }
-    val streamRate = {
-      val ok = Seq(canaryOnce(), canaryOnce(), canaryOnce()).filter(_ > 0).sorted
-      if (ok.isEmpty) -1.0 else ok(ok.size / 2)
-    }
+    val (streamRate, _) = Bench.canary(spark, base)
 
     val defs = SparkEntry.allDefs.filter(d => SpotQueries.contains(d.name))
-    def timeOne(d: QueryDef, dir: String): Double = {
-      val t0 = System.nanoTime()
-      try {
-        d.run(spark, dir).write.mode("overwrite").format("noop").save()
-        (System.nanoTime() - t0) / 1e9
-      } catch {
-        case e: Throwable =>
-          System.err.println(s"[benchscale100] ${d.name} @ $dir failed: ${e.getMessage}")
-          -1.0
-      } finally {
-        try {
-          spark.catalog.clearCache()
-          spark.catalog.listTables().collect()
-            .filter(_.isTemporary)
-            .foreach(t => spark.catalog.dropTempView(t.name))
-        } catch { case _: Throwable => () }
-      }
-    }
-    def floored(b: Double, sc: Double): Double =
-      sc / math.max(b, BenchScale.BaseTimeFloor)
-    def med3(a: Double, x: Double, y: Double): Double = {
-      val v = Seq(a, x, y).filter(_ > 0).sorted
-      if (v.isEmpty) -1.0 else v(v.size / 2)
-    }
+    def timeOne(d: QueryDef, dir: String): Double = Bench.timeOne(spark, d, dir, "benchscale100")
+    import BenchScale.floored
     val requeried = scala.collection.mutable.LinkedHashMap[String, Seq[Double]]()
     def requeryOne(n: String, b: Double, sc: Double): (String, Double, Double, Double) = {
       val d = defs.find(_.name == n).get
       val (b2, sc2) = (timeOne(d, base), timeOne(d, scaled))
       val (b3, sc3) = (timeOne(d, base), timeOne(d, scaled))
       requeried(n) = Seq(b, sc, b2, sc2, b3, sc3)
-      val (bm, scm) = (med3(b, b2, b3), med3(sc, sc2, sc3))
+      val (bm, scm) = (Bench.medianOk(Seq(b, b2, b3)), Bench.medianOk(Seq(sc, sc2, sc3)))
       println(f"[benchscale100] $n%-28s REQUERY(med3) base $bm%6.2f s  x$reps $scm%7.2f s  factor ${scm / bm}%6.2f")
       (n, bm, scm, scm / bm)
     }
@@ -566,12 +491,9 @@ object BenchScale100 {
     val qs = rows.map { case (n, b, sc, f) =>
       f""""$n":{"base_sec":$b%.3f,"scaled_sec":$sc%.3f,"factor":$f%.2f,"floored_factor":${floored(b, sc)}%.2f,"sublinearity":${floored(b, sc) / reps}%.3f}"""
     }.mkString("{", ",", "}")
-    val req = requeried.map { case (n, ms) =>
-      val Seq(b1, sc1, b2, sc2, b3, sc3) = ms
-      f""""$n":{"base_runs":[$b1%.3f,$b2%.3f,$b3%.3f],"scaled_runs":[$sc1%.3f,$sc2%.3f,$sc3%.3f]}"""
-    }.mkString("{", ",", "}")
-    val viol = violations.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val fails = failures.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val req = BenchScale.requeriedJson(requeried)
+    val viol = BenchScale.jsonNames(violations)
+    val fails = BenchScale.jsonNames(failures)
     val json =
       f"""{"metric":"scale100_spot_sweep","base":"$base","scaled":"$scaled","data_factor":$reps,"n_queries":${rows.size},"factor_bound":$factorBound%.1f,"base_time_floor_sec":${BenchScale.BaseTimeFloor}%.1f,"duplicate_density_note":"the amplifier makes every document a $reps-way duplicate cluster; factors near $reps are LINEAR","violations":$viol,"within_bound":${violations.isEmpty && failures.isEmpty},"failed":$fails,"requeried_raw":$req,"worst_query":"${worst._1}","worst_floored_factor":${worst._2}%.2f,"stream_events_per_sec":$streamRate%.0f,"queries":$qs}"""
     // repo-rooted like BENCH_SCALE.json (ADVICE r16 #2): a run launched

@@ -122,8 +122,7 @@ object WindowAudit {
     */
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val spark = Graft.session(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]",
-      "graft-window-audit")
+    val spark = Graft.session(appName = "graft-window-audit")
     SparkEntry.allDefs.foreach { d =>
       try {
         val plan = d.run(spark, sfDir).queryExecution.optimizedPlan

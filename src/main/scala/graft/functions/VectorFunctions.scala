@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -156,9 +155,9 @@ object GraftFunctions {
     * re-registration was pure per-query ceremony.
     */
   private val registered = java.util.Collections.newSetFromMap(
-    new java.util.concurrent.ConcurrentHashMap[SparkSession, java.lang.Boolean]())
+    new java.util.concurrent.ConcurrentHashMap[org.apache.spark.sql.SparkSession, java.lang.Boolean]())
 
-  def register(spark: SparkSession): Unit = {
+  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
     if (!registered.add(spark)) return
     val reg = spark.sessionState.functionRegistry
     reg.createOrReplaceTempFunction(

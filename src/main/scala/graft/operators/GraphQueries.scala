@@ -785,27 +785,35 @@ object GraphQueries extends QueryModule {
     */
   def labelPropagation(s: SparkSession, dir: String): DataFrame = {
     val pairs = edges(s, dir)
-    val nodes = pairs.select(col("u").as("n"))
-      .union(pairs.select(col("v"))).distinct()
-    def step(lbl: DataFrame): DataFrame =
-      lbl.select("n", "lbl")
-        .union(pairs.join(lbl, col("u") === col("n"))
-          .select(col("v").as("n"), col("lbl")))
-        .union(pairs.join(lbl, col("v") === col("n"))
-          .select(col("u").as("n"), col("lbl")))
-        .groupBy("n").agg(min("lbl").as("lbl"))
     // round-1 labels feed THREE subtrees of round 2 (the identity leg +
     // both join orientations): materialize once (optimization r18,
     // size-gated — the label table is |V|-sized) so round 2 plans over a
     // leaf instead of triplicating the round-1 join pyramid
-    val l1 = Materialize.gated(edges(s, dir),
-      step(nodes.withColumn("lbl", col("n"))), "lprop-l1")
-    val l2 = step(l1)
+    val l1 = Materialize.gated(pairs,
+      labelPropagationStep(pairs, labelPropagationSeed(pairs)), "lprop-l1")
+    val l2 = labelPropagationStep(pairs, l1)
     l2.groupBy(col("lbl").as("label"))
       .agg(count(lit(1)).as("n_members"))
       .orderBy(desc("n_members"), asc("label"))
       .limit(50)
   }
+
+  /** Round-0 labels: every node labelled with its own id. */
+  private[graft] def labelPropagationSeed(pairs: DataFrame): DataFrame =
+    pairs.select(col("u").as("n"))
+      .union(pairs.select(col("v"))).distinct()
+      .withColumn("lbl", col("n"))
+
+  /** One propagation round: each node takes the min label over itself and
+    * both endpoint orientations of its edges.
+    */
+  private[graft] def labelPropagationStep(pairs: DataFrame, lbl: DataFrame): DataFrame =
+    lbl.select("n", "lbl")
+      .union(pairs.join(lbl, col("u") === col("n"))
+        .select(col("v").as("n"), col("lbl")))
+      .union(pairs.join(lbl, col("v") === col("n"))
+        .select(col("u").as("n"), col("lbl")))
+      .groupBy("n").agg(min("lbl").as("lbl"))
 
   private val labelPropagationSql =
     s"""WITH $edgesCte,

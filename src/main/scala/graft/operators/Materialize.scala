@@ -34,13 +34,15 @@ object Materialize {
   /** Materialize `frame` for multi-consumer reuse, gated on `input`'s
     * estimated bytes (pass the base corpus relation the frame derives
     * from). Below the gate: `localCheckpoint()`. Above: one scratch-
-    * parquet round-trip.
+    * parquet round-trip. The gate fails closed: an input whose size
+    * cannot be estimated takes the scratch-parquet path, the one that
+    * survives corpus scale.
     */
   def gated(input: DataFrame, frame: DataFrame, tag: String): DataFrame = {
     val inputBytes =
-      try input.queryExecution.optimizedPlan.stats.sizeInBytes
-      catch { case _: Throwable => BigInt(0) }
-    if (inputBytes <= BigInt(localMaxInputBytes(frame))) frame.localCheckpoint()
+      try Some(input.queryExecution.optimizedPlan.stats.sizeInBytes)
+      catch { case scala.util.control.NonFatal(_) => None }
+    if (inputBytes.exists(_ <= BigInt(localMaxInputBytes(frame)))) frame.localCheckpoint()
     else {
       val p = graft.Scratch.dir(s"graft-mat-$tag")
       frame.write.mode("overwrite").parquet(p)

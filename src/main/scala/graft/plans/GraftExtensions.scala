@@ -29,7 +29,7 @@ object SimplifySelfCosine extends Rule[LogicalPlan] {
 /** Session extension wiring (SURVEY.md §4): registers the custom vector
   * expressions as permanent session functions and injects the optimizer
   * rule. Usable two ways:
-  *   SparkSession.builder().withExtensions(new GraftExtensions)
+  *   builder.withExtensions(new GraftExtensions)   (what Graft.session does)
   *   --conf spark.sql.extensions=graft.plans.GraftExtensions
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {

@@ -1,23 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** GraftExtensions: injected functions resolve in SQL, and the
   * SimplifySelfCosine optimizer rule rewrites self-similarity without
   * changing results.
   */
-class ExtensionsSpec extends AnyFunSuite {
-
-  // needs its own session: extensions bind at session build time
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .appName("graft-ext-test")
-    .withExtensions(new plans.GraftExtensions)
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ExtensionsSpec extends SparkSuite {
 
   test("injected functions resolve without manual registration") {
     import spark.implicits._

@@ -437,12 +437,25 @@ class PlanSpec extends SparkSuite {
   }
 
   test("label propagation: every round is keyed joins + keyed min, no pair expansion") {
-    val p = plan("graph_label_propagation")
+    // the declared query materializes round 1, so both rounds are pinned on
+    // the lazy two-round lineage of the same step it runs
+    import operators.GraphQueries.{labelPropagationSeed, labelPropagationStep}
+    val pairs = operators.GraphQueries.edges(spark, Sf)
+    val rounds = labelPropagationStep(pairs,
+      labelPropagationStep(pairs, labelPropagationSeed(pairs)))
+    val p = rounds.queryExecution.executedPlan.toString
     assert(!p.contains("CartesianProduct"), p)
     assert(!p.contains("BroadcastNestedLoopJoin"), p)
     // two rounds × two endpoint orientations = at least 4 equi joins
     assert("SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin".r
       .findAllIn(p).size >= 4, p)
+    // each round ends in a node-keyed min (final aggregate of each round)
+    assert("""HashAggregate\(keys=\[n#\d+L?\], functions=\[min\(lbl""".r
+      .findAllIn(p).size >= 2, p)
+    // and the declared query's round 2 still joins both orientations
+    val q = plan("graph_label_propagation")
+    assert(!q.contains("CartesianProduct") && !q.contains("BroadcastNestedLoopJoin"), q)
+    assert("SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin".r.findAllIn(q).size >= 2, q)
   }
 
   test("q04: EXISTS plans as one semi join, no correlated re-scan") {

@@ -1,29 +1,32 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.internal.SQLConf
 
 /** RocksDB state store provider: the scale path for streaming state (state
-  * larger than executor heap spills to disk instead of OOMing). Needs its
-  * own session because the provider is fixed per-query at start.
+  * larger than executor heap spills to disk instead of OOMing). The
+  * provider is fixed per query at start, so it is set on the shared session
+  * only around this suite's own queries and restored after — every suite
+  * that runs later keeps the default provider.
   */
-class RocksDBStateSpec extends AnyFunSuite {
+class RocksDBStateSpec extends SparkSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .appName("graft-rocksdb-test")
-    .withExtensions(new plans.GraftExtensions)
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.streaming.stateStore.providerClass",
+  private val ProviderKey = SQLConf.STATE_STORE_PROVIDER_CLASS.key
+
+  private def withRocksDB[T](body: => T): T = {
+    val prev = spark.conf.getOption(ProviderKey)
+    spark.conf.set(ProviderKey,
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+    try body
+    finally prev match {
+      case Some(p) => spark.conf.set(ProviderKey, p)
+      case None => spark.conf.unset(ProviderKey)
+    }
+  }
 
-  test("streaming aggregation runs on the RocksDB state store") {
+  test("streaming aggregation runs on the RocksDB state store") { withRocksDB {
     import spark.implicits._
-    val stage = java.nio.file.Files.createTempDirectory("graft_rocks_").toString
+    val stage = Scratch.dir("graft_rocks_")
     (0 until 1000).map(i => (i % 7, 1L)).toDF("k", "v")
       .coalesce(1).write.parquet(s"$stage/in.parquet")
     val agg = spark.readStream.schema("k INT, v LONG").parquet(s"$stage/*")
@@ -39,9 +42,9 @@ class RocksDBStateSpec extends AnyFunSuite {
     val provider = q.lastProgress.stateOperators.headOption
       .map(_.customMetrics.toString).getOrElse("")
     assert(provider.toLowerCase.contains("rocksdb"), s"metrics: $provider")
-  }
+  }}
 
-  test("state-v2 TTL purges expired keys from the checkpoint (statestore probe)") {
+  test("state-v2 TTL purges expired keys from the checkpoint (statestore probe)") { withRocksDB {
     // transformWithState in ProcessingTime mode self-triggers micro-batches,
     // so a deterministic "two batches, N epochs" TTL probe is impossible
     // offline (docs/ROUND4.md §4). This sidesteps it: the TTL contract is
@@ -95,5 +98,13 @@ class RocksDBStateSpec extends AnyFunSuite {
       s"aged-out keys survived in the checkpoint: $keys")
     if (sinceTouchMs < 3000)
       assert(keys == Set(3L), s"expected only the fresh key in state, got: $keys")
+  }}
+
+  test("leaves the shared session's state-store provider and shuffle partitions as it found them") {
+    assert(spark.conf.get(ProviderKey) == SQLConf.STATE_STORE_PROVIDER_CLASS.defaultValueString,
+      "the RocksDB provider leaked into the shared session")
+    assert(spark.conf.get(SQLConf.SHUFFLE_PARTITIONS.key) ==
+      spark.sparkContext.defaultParallelism.toString,
+      "shuffle partitions differ from the session factory's setting")
   }
 }

@@ -1,25 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Native TopKPerGroup operator: plan shape and equivalence with the
   * window-function formulation.
   */
-class TopKSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-topk-test")
-    .withExtensions(new plans.GraftExtensions)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  private val Sf = "/root/testdata/sf0.001"
+class TopKSpec extends SparkSuite {
 
   test("plans as TopKPerGroupExec, not Window+Filter") {
     val base = Tables.orders(spark, Sf)
